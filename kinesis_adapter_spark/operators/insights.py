@@ -1730,7 +1730,7 @@ def _materialize_iterative(
     # RETURNS is a read of the staged result, so a plan dump of the
     # declared key shows only Sort+Scan — the actual iterative loop
     # plan was never committed as evidence. With KAS_ITER_PLAN_DUMP
-    # set (tools/dump_plan_r17.py), dump the PRE-materialization plan
+    # set (tools/dump_plan.py), dump the PRE-materialization plan
     # of the exact `out` about to execute.
     dump_dir = os.environ.get("KAS_ITER_PLAN_DUMP")
     if dump_dir:

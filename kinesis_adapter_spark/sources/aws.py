@@ -117,85 +117,3 @@ def read_all_records(stream: str) -> list[dict]:
                     break
             it = resp.get("NextShardIterator")
     return out
-
-
-class moto_put_lock:
-    """Cross-process serialization of PutRecords against the LOCAL moto
-    emulator: moto's in-memory Kinesis backend drops records under
-    concurrent puts (measured: 7998/8000 with 8 writer threads). Real
-    Kinesis is concurrent-safe — production runs (no local endpoint)
-    skip the lock entirely. flock works across the Python worker
-    processes of a local[*] session because they share the host.
-
-    The lock file is keyed by STREAM name (ADVICE r01): moto's drop
-    happens on concurrent puts to one in-memory stream, so unrelated
-    pipelines writing different streams need not serialize against
-    each other."""
-
-    def __init__(self, endpoint: str | None, stream: str = "default"):
-        self.local = bool(endpoint) and "127.0.0.1" in (endpoint or "")
-        self.stream = stream
-        self._fh = None
-
-    def __enter__(self):
-        if self.local:
-            import fcntl
-            import re as _re
-
-            safe = _re.sub(r"[^A-Za-z0-9_.-]", "_", self.stream)
-            from kinesis_adapter_spark.staging import ephemeral_file
-
-            self._fh = open(
-                ephemeral_file(f"/tmp/kas_moto_put.{safe}.lock"), "w"
-            )
-            fcntl.flock(self._fh, fcntl.LOCK_EX)
-        return self
-
-    def __exit__(self, *exc):
-        if self._fh is not None:
-            import fcntl
-
-            fcntl.flock(self._fh, fcntl.LOCK_UN)
-            self._fh.close()
-        return False
-
-
-def put_records_with_retry(
-    kin,
-    stream: str,
-    records: list[dict],
-    max_retries: int = 5,
-    backoff_s: float = 0.05,
-) -> int:
-    """PutRecords in ≤500-record chunks with per-record failure retry.
-
-    This is the reference adapter's core sink contract (SURVEY.md
-    §2.0): Kinesis caps PutRecords at 500 records / 5 MB; individual
-    records can fail (throttling) while the call succeeds — those are
-    re-enqueued with exponential backoff. Returns records delivered."""
-    delivered = 0
-    lock = moto_put_lock(
-        getattr(getattr(kin, "meta", None), "endpoint_url", None), stream=stream
-    )
-    for i in range(0, len(records), 500):
-        chunk = records[i : i + 500]
-        attempt = 0
-        while chunk:
-            with lock:
-                resp = kin.put_records(StreamName=stream, Records=chunk)
-            failed = resp.get("FailedRecordCount", 0)
-            if not failed:
-                delivered += len(chunk)
-                break
-            retry = [
-                rec
-                for rec, st in zip(chunk, resp["Records"])
-                if "ErrorCode" in st
-            ]
-            delivered += len(chunk) - len(retry)
-            chunk = retry
-            attempt += 1
-            if attempt > max_retries:
-                raise RuntimeError(f"{len(chunk)} records failed after retries")
-            time.sleep(backoff_s * (2**attempt))
-    return delivered

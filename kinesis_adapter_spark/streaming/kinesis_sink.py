@@ -1,26 +1,61 @@
-"""foreachBatch Kinesis sink: the reference adapter's core delivery
-stage re-expressed on Structured Streaming (SURVEY.md §2.0, §3.4).
+"""Kinesis delivery: the reference adapter's sink stage (SURVEY.md §2.0,
+§3.4) on Spark.
 
-Contract implemented:
-- records serialized to JSON, partitioned by a key column (Kinesis
-  routes partition-key hash → shard, ordering per shard only);
-- PutRecords in ≤500-record chunks (the API cap), per-record failure
-  retry with exponential backoff (a PutRecords call can succeed while
-  individual records throttle — FailedRecordCount);
-- batch_id idempotency ledger: foreachBatch is at-least-once across
-  restarts; a delivered batch_id is recorded durably next to the
-  checkpoint and re-delivery of the same batch is skipped, upgrading
-  the sink to effectively-once for whole-batch replays.
+There is one delivery path, :func:`deliver`, used by the streaming
+sink below and by the batch ``sink_kinesis`` query:
 
-Writes fan out via DataFrame.foreachPartition, so each executor ships
-its own partitions' chunks — the production shape. The closure is
-self-contained (executors don't need this package importable).
+- the JVM builds each record: the non-key columns as one JSON object
+  (null fields kept) and the key column cast to string as the
+  partition key. Kinesis routes a key's hash to a shard, so ordering
+  holds per key;
+- each executor puts its own partition with ``kinesis_put.put_all``:
+  at most 500 records and 5 MiB per request, a record over 1 MiB
+  rejected before any put, and only failed (throttled) records resent
+  with backoff.
+
+Replay contract: ``KinesisForeachBatchSink`` records each delivered
+batch_id in a ledger next to the checkpoint, so a whole batch replayed
+after a restart is skipped. A batch that fails partway is not marked,
+and its replay sends again every chunk that had already gone out:
+delivery is at-least-once per chunk, so a consumer that needs
+exactly-once dedups on a record field.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 from pathlib import Path
+
+from pyspark import cloudpickle
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from kinesis_adapter_spark.staging import ephemeral_file
+from kinesis_adapter_spark.streaming import kinesis_put
+
+cloudpickle.register_pickle_by_value(kinesis_put)
+
+
+def deliver(
+    df: DataFrame, stream: str, endpoint: str, aws_kw: dict, pk_col: str = "pk"
+) -> None:
+    """Put every row of ``df`` to ``stream``: the columns other than
+    ``pk_col`` as the JSON payload, ``pk_col`` as the partition key."""
+    # executors only open the emulator's lock file; the driver removes it at exit
+    ephemeral_file(kinesis_put.lock_path(stream))
+    payload = F.to_json(
+        F.struct(*[df[c] for c in df.columns if c != pk_col]),
+        {"ignoreNullFields": "false"},
+    )
+    df.select(payload, df[pk_col].cast("string")).foreachPartition(
+        functools.partial(
+            kinesis_put.put_partition,
+            stream=stream,
+            endpoint=endpoint,
+            aws_kw=aws_kw,
+        )
+    )
 
 
 class KinesisForeachBatchSink:
@@ -40,82 +75,10 @@ class KinesisForeachBatchSink:
         self.ledger = Path(ledger_dir)
         self.ledger.mkdir(parents=True, exist_ok=True)
         self.pk_col = partition_key_col
-        # Driver-side registration of the executor-side moto lock file
-        # (same naming as put_guard below) so a run leaves no /tmp
-        # residue — the executor closure itself stays
-        # package-import-free; __init__ runs on the driver only.
-        import re as _re
-
-        from kinesis_adapter_spark.staging import ephemeral_file
-
-        safe = _re.sub(r"[^A-Za-z0-9_.-]", "_", stream)
-        ephemeral_file(f"/tmp/kas_moto_put.{safe}.lock")
 
     def __call__(self, batch_df, batch_id: int) -> None:
         mark = self.ledger / f"batch-{batch_id}.done"
         if mark.exists():  # replayed batch after restart → skip (idempotent)
             return
-        stream, endpoint, aws_kw, pk_col = (
-            self.stream,
-            self.endpoint,
-            self.aws_kw,
-            self.pk_col,
-        )
-
-        def write_partition(rows):
-            import contextlib
-            import json as _json
-            import time as _time
-
-            import boto3 as _boto3
-
-            @contextlib.contextmanager
-            def put_guard():
-                # moto's in-memory Kinesis loses records under
-                # concurrent puts; serialize against the LOCAL emulator
-                # only (real Kinesis runs lock-free). Keyed by stream
-                # name with the SAME file naming as aws.moto_put_lock so
-                # the two lock sites contend on one file per stream but
-                # unrelated streams proceed in parallel (ADVICE r01).
-                # Inline (no package import): executors must not need
-                # kinesis_adapter_spark importable.
-                if endpoint and "127.0.0.1" in endpoint:
-                    import fcntl
-                    import re as _re
-
-                    safe = _re.sub(r"[^A-Za-z0-9_.-]", "_", stream)
-                    with open(f"/tmp/kas_moto_put.{safe}.lock", "w") as fh:
-                        fcntl.flock(fh, fcntl.LOCK_EX)
-                        try:
-                            yield
-                        finally:
-                            fcntl.flock(fh, fcntl.LOCK_UN)
-                else:
-                    yield
-
-            kin = _boto3.client("kinesis", endpoint_url=endpoint, **aws_kw)
-            recs = []
-            for r in rows:
-                d = r.asDict()
-                pk = str(d.pop(pk_col))
-                recs.append({"Data": _json.dumps(d).encode(), "PartitionKey": pk})
-            for i in range(0, len(recs), 500):
-                chunk = recs[i : i + 500]
-                attempt = 0
-                while chunk:
-                    with put_guard():
-                        resp = kin.put_records(StreamName=stream, Records=chunk)
-                    if not resp.get("FailedRecordCount"):
-                        break
-                    chunk = [
-                        rec
-                        for rec, st in zip(chunk, resp["Records"])
-                        if "ErrorCode" in st
-                    ]
-                    attempt += 1
-                    if attempt > 5:
-                        raise RuntimeError("kinesis put failed after retries")
-                    _time.sleep(0.05 * (2**attempt))
-
-        batch_df.foreachPartition(write_partition)
+        deliver(batch_df, self.stream, self.endpoint, self.aws_kw, self.pk_col)
         mark.write_text(json.dumps({"batch_id": batch_id}))

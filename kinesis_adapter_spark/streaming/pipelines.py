@@ -778,10 +778,10 @@ def stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_to_kinesis_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE reference pipeline end-to-end (SURVEY.md §2.1-I row 8):
     watch a directory of NDJSON objects ("S3") → schema'd decode →
-    transform (drop error events, assign partition key) → foreachBatch
-    → chunked PutRecords (≤500, retry/backoff) into moto Kinesis, with
-    checkpoint + batch-id idempotency ledger → drain every shard and
-    return the delivered payloads.
+    transform (drop error events, key by user) → foreachBatch →
+    ``KinesisForeachBatchSink`` (kinesis_sink's one delivery path) into
+    moto Kinesis, with checkpoint + batch-id idempotency ledger → drain
+    every shard and return the delivered payloads.
 
     The oracle compares the drained records against the source table:
     the whole pipeline must be lossless and exactly-once. Restart
@@ -798,11 +798,13 @@ def stream_to_kinesis_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ledger_dir=str(Path(ckpt) / "ledger"),
     )
     src = _events_stream(spark, sf_dir, max_files=6)
+    # user_id % 4 hashed all four keys to one shard; the user id keeps
+    # per-user order and spreads the load over the shards
     out = src.filter(F.col("event_type") != "error").select(
         "event_id",
         "event_type",
         "user_id",
-        (F.col("user_id") % 4).cast("string").alias("pk"),
+        F.col("user_id").cast("string").alias("pk"),
     )
     q = (
         out.writeStream.foreachBatch(sink)

@@ -3631,9 +3631,10 @@ def test_bench_parallel_probe_gates_when_scalar_reads_cool(monkeypatch):
         bench._HOT_PAR_SEC, bench._WAIT_BUDGET[0] = old
 
 
-def test_bench_parallel_probe_reads_sane():
+def test_bench_parallel_probe_reads_sane(spark):
     """_probe_parallel returns a positive sub-second max-over-workers
-    reading and is reusable (pooled workers)."""
+    reading and is reusable (pooled workers), with a Spark JVM already
+    running as in bench.main (a forked pool could hang here)."""
     import bench
 
     p1 = bench._probe_parallel()

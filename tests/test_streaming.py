@@ -5,6 +5,7 @@ native-session-window ≡ batch-sessionization equivalence.
 
 from __future__ import annotations
 
+import base64
 import json
 import shutil
 import time
@@ -160,26 +161,199 @@ def test_kinesis_e2e_restart_is_idempotent(spark, tmp_path):
     assert n2 == 12, "restart must not redeliver"
 
 
-def test_sink_retry_on_partial_failure(monkeypatch):
-    """put_records_with_retry re-enqueues only the failed records."""
-    from kinesis_adapter_spark.sources.aws import put_records_with_retry
+class _FakeKinesis:
+    """Records each PutRecords request; ``fail(call_no, i)`` decides
+    whether record i of that call is throttled."""
 
-    calls = []
+    def __init__(self, fail=lambda call_no, i: False):
+        self.fail = fail
+        self.calls: list[list[dict]] = []
 
-    class FakeKinesis:
-        def put_records(self, StreamName, Records):
-            calls.append(len(Records))
-            if len(calls) == 1:  # first call: fail half the records
-                st = [
-                    {"ErrorCode": "Throttling"} if i % 2 else {"SequenceNumber": "1"}
-                    for i in range(len(Records))
-                ]
-                return {"FailedRecordCount": sum(1 for s in st if "ErrorCode" in s), "Records": st}
-            return {"FailedRecordCount": 0, "Records": [{"SequenceNumber": "1"}] * len(Records)}
+    def put_records(self, StreamName, Records):
+        self.calls.append(Records)
+        st = [
+            {"ErrorCode": "ProvisionedThroughputExceededException"}
+            if self.fail(len(self.calls), i)
+            else {"SequenceNumber": "1"}
+            for i in range(len(Records))
+        ]
+        return {"FailedRecordCount": sum("ErrorCode" in x for x in st), "Records": st}
 
-    n = put_records_with_retry(FakeKinesis(), "s", [{"Data": b"x", "PartitionKey": "0"}] * 600)
+
+def test_sink_retry_on_partial_failure():
+    """The put loop resends exactly the throttled records."""
+    from kinesis_adapter_spark.streaming.kinesis_put import put_all
+
+    kin = _FakeKinesis(fail=lambda call_no, i: call_no == 1 and i % 2 == 1)
+    records = [{"Data": str(i).encode(), "PartitionKey": "0"} for i in range(600)]
+    n = put_all(kin, "s", records)
+    calls = [len(c) for c in kin.calls]
     assert n == 600
     assert calls[0] == 500 and calls[1] == 250 and calls[2] == 100  # chunking + retry
+    assert kin.calls[1] == records[1:500:2]  # only the throttled records
+
+
+def test_put_all_rejects_oversize_record_before_any_put():
+    from kinesis_adapter_spark.streaming.kinesis_put import put_all
+
+    kin = _FakeKinesis()
+    big = {"Data": b"x" * (1024 * 1024), "PartitionKey": "k"}
+    with pytest.raises(ValueError, match="1048577 bytes"):
+        put_all(kin, "s", [{"Data": b"ok", "PartitionKey": "k"}, big])
+    assert kin.calls == []
+
+
+def test_put_all_caps_request_bytes():
+    """Records of about 1 MiB go five to a request: the 5 MiB request
+    cap, counting Data plus PartitionKey, binds before the 500 cap."""
+    from kinesis_adapter_spark.streaming.kinesis_put import (
+        MAX_BYTES_PER_PUT,
+        put_all,
+    )
+
+    kin = _FakeKinesis()
+    rec = {"Data": b"x" * (1024 * 1024 - 10), "PartitionKey": "k"}
+    assert put_all(kin, "s", [rec] * 12) == 12
+    assert [len(c) for c in kin.calls] == [5, 5, 2]
+    for c in kin.calls:
+        assert sum(len(r["Data"]) + len(r["PartitionKey"]) for r in c) <= MAX_BYTES_PER_PUT
+
+
+def test_sink_replay_after_partial_failure_resends_delivered_chunks(spark, tmp_path):
+    """A batch whose second chunk exhausts its retries fails with no
+    ledger mark; its replay sends every chunk again, including the one
+    already delivered (at-least-once per chunk), and a replay after
+    success sends nothing. The Kinesis endpoint is a local fake that
+    throttles every record past the first 500 until it is healed."""
+    import threading
+    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+    from kinesis_adapter_spark.streaming.kinesis_sink import KinesisForeachBatchSink
+
+    received: list[int] = []
+    state = {"accept": 500}
+
+    class Handler(BaseHTTPRequestHandler):
+        def do_POST(self):
+            body = json.loads(self.rfile.read(int(self.headers["Content-Length"])))
+            st = []
+            for rec in body["Records"]:
+                if state["accept"] > 0:
+                    state["accept"] -= 1
+                    received.append(json.loads(base64.b64decode(rec["Data"]))["event_id"])
+                    st.append({"SequenceNumber": "1", "ShardId": "shardId-000000000000"})
+                else:
+                    st.append({"ErrorCode": "ProvisionedThroughputExceededException",
+                               "ErrorMessage": "throttled"})
+            out = json.dumps({
+                "FailedRecordCount": sum("ErrorCode" in x for x in st), "Records": st,
+            }).encode()
+            self.send_response(200)
+            self.send_header("Content-Type", "application/x-amz-json-1.1")
+            self.send_header("Content-Length", str(len(out)))
+            self.end_headers()
+            self.wfile.write(out)
+
+        def log_message(self, *args):
+            pass
+
+    server = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    try:
+        ledger = tmp_path / "ledger"
+        sink = KinesisForeachBatchSink(
+            stream="kas-fake",
+            endpoint=f"http://127.0.0.1:{server.server_port}",
+            aws_kw={"region_name": "us-east-1", "aws_access_key_id": "testing",
+                    "aws_secret_access_key": "testing"},
+            ledger_dir=str(ledger),
+        )
+        batch = spark.range(1200).select(
+            F.col("id").alias("event_id"), (F.col("id") % 7).cast("string").alias("pk")
+        ).coalesce(1)
+        with pytest.raises(Exception, match="failed after 5 retries"):
+            sink(batch, 7)
+        assert not (ledger / "batch-7.done").exists()
+        assert sorted(received) == list(range(500))
+
+        state["accept"] = 10**9  # healed
+        sink(batch, 7)
+        assert (ledger / "batch-7.done").exists()
+        assert sorted(received) == sorted(list(range(500)) + list(range(1200)))
+        sink(batch, 7)  # whole-batch replay after success: ledger skips it
+        assert len(received) == 1700
+    finally:
+        server.shutdown()
+        server.server_close()
+
+
+def test_put_partition_ships_by_value(tmp_path):
+    """Executors cannot import this package, so the put function must
+    unpickle (and run) in a process that has no path to the repo."""
+    import functools
+    import os
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    # importing kinesis_sink registers kinesis_put for by-value pickling
+    from kinesis_adapter_spark.streaming import kinesis_put, kinesis_sink  # noqa: F401
+
+    blob = tmp_path / "put.pkl"
+    blob.write_bytes(cloudpickle.dumps(functools.partial(
+        kinesis_put.put_partition, stream="s", endpoint=None,
+        aws_kw={"region_name": "us-east-1"},
+    )))
+    repo = str(Path(__file__).resolve().parents[1])
+    code = (
+        "import os, pickle, sys\n"
+        f"assert not any(os.path.abspath(p or '.') == {repo!r} for p in sys.path)\n"
+        f"fn = pickle.loads(open({str(blob)!r}, 'rb').read())\n"
+        "fn([])\n"
+        "assert 'kinesis_adapter_spark' not in sys.modules\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", code], cwd="/tmp", env=env,
+        capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr
+
+
+def _records_per_shard(stream: str) -> dict[str, int]:
+    from kinesis_adapter_spark.sources import aws
+
+    kin = aws.client("kinesis")
+    out = {}
+    for shard in kin.describe_stream(StreamName=stream)["StreamDescription"]["Shards"]:
+        it = kin.get_shard_iterator(
+            StreamName=stream, ShardId=shard["ShardId"], ShardIteratorType="TRIM_HORIZON"
+        )["ShardIterator"]
+        out[shard["ShardId"]] = len(kin.get_records(ShardIterator=it, Limit=10000)["Records"])
+    return out
+
+
+@pytest.mark.parametrize("key", ["sink_kinesis", "stream_to_kinesis_e2e"])
+def test_kinesis_keys_spread_over_shards(spark, monkeypatch, key):
+    """The pipelines key records by user, so a 4-shard stream receives
+    records on more than one shard (user_id % 4 hashed to one shard)."""
+    from kinesis_adapter_spark.plans.registry import QUERIES, load_all_modules
+    from kinesis_adapter_spark.sources import aws
+
+    load_all_modules()
+    streams = []
+    create = aws.create_stream
+
+    def spy(name, shards=4):
+        streams.append(name)
+        return create(name, shards=shards)
+
+    monkeypatch.setattr(aws, "create_stream", spy)
+    QUERIES[key](spark, SF)
+    per_shard = _records_per_shard(streams[0])
+    assert len(per_shard) == 4
+    assert sum(n > 0 for n in per_shard.values()) > 1, per_shard
 
 
 def test_windowed_state_survives_restart(spark, tmp_path):

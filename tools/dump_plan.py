@@ -1,14 +1,14 @@
-"""Dump plans/r17/<key>_{before,after}.txt evidence files.
+"""Dump plans/<TAG>/<key>_<SUFFIX>.txt evidence files.
 
-Usage: python tools/dump_plan_r17.py SUFFIX KEY [KEY ...]
+Usage: python tools/dump_plan.py TAG SUFFIX KEY [KEY ...]
 Builds each declared frame at sf0.1 (plan_audit session config) and
-writes its ``explain('formatted')`` output to plans/r17/<key>_SUFFIX.txt.
+writes its ``explain('formatted')`` output to plans/TAG/<key>_SUFFIX.txt.
 
-Special keys (the VERDICT r16 item #4 evidence-regeneration set):
+Special keys:
 - ``lsh_pair_agg``: the SHIPPED dedup_lsh_tuning aggregation path —
   `_lsh_tuning_pair_agg` over the staged capped-shingle artifact read,
-  exactly what the key collects from (the r16 dump was taken on the
-  unpinned default path and showed no change).
+  exactly what the key collects from (a dump of the declared key shows
+  the unpinned default path).
 - graph_pagerank / graph_label_propagation additionally honor
   ``KAS_ITER_PLAN_DUMP``: building the declared frame with that env
   var set makes `_materialize_iterative` dump the PRE-materialization
@@ -30,13 +30,13 @@ SF = "/root/testdata/sf0.1"
 
 
 def main() -> None:
-    suffix, keys = sys.argv[1], sys.argv[2:]
+    tag, suffix, keys = sys.argv[1], sys.argv[2], sys.argv[3:]
     from kinesis_adapter_spark.plans.registry import QUERIES, load_all_modules
     from kinesis_adapter_spark.session import build_spark
 
-    spark = build_spark(app_name="kas-dump-plan-r17", shuffle_partitions=8)
+    spark = build_spark(app_name="kas-dump-plan", shuffle_partitions=8)
     load_all_modules()
-    plan_dir = ROOT / "plans" / "r17"
+    plan_dir = ROOT / "plans" / tag
     plan_dir.mkdir(parents=True, exist_ok=True)
     os.environ["KAS_ITER_PLAN_DUMP"] = str(plan_dir)
     for key in keys:
